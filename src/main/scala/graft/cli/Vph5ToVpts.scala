@@ -1,7 +1,8 @@
 package graft.cli
 
 import graft.functions.OdimPaths
-import graft.lake.{Inventory, LakeController}
+import graft.lake.LakeController
+import graft.vpts.Vpts
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -37,9 +38,22 @@ object Vph5ToVpts {
       try run(spark, opts) finally spark.stop()
     }
 
+  private val Flags =
+    Set("--bucket", "--inventory", "--modified-days-ago", "--coverage", "--path-folder")
+
+  /** Flag -> value; rejects an unknown flag, a flag without a value and a
+    * non-integer `--modified-days-ago`.
+    */
   private def parseOpts(args: Array[String]): Map[String, String] = {
-    val opts = args.sliding(2, 2).collect { case Array(k, v) => k -> v }.toMap
+    val opts = args.grouped(2).map {
+      case Array(k, v) if Flags(k) => k -> v
+      case Array(k) if Flags(k) => sys.error(s"$k requires a value")
+      case a => sys.error(s"unknown option ${a.head}")
+    }.toMap
     opts.getOrElse("--bucket", sys.error("--bucket required"))
+    opts.get("--modified-days-ago").foreach { v =>
+      if (v.toIntOption.isEmpty) sys.error(s"--modified-days-ago: not an integer: $v")
+    }
     opts
   }
 
@@ -48,14 +62,13 @@ object Vph5ToVpts {
     run(spark, parseOpts(args))
 
   private def run(spark: SparkSession, opts: Map[String, String]): Unit = {
-    val bucket = opts.getOrElse("--bucket", sys.error("--bucket required"))
+    val bucket = opts("--bucket")
     val modifiedDaysAgo = opts.getOrElse("--modified-days-ago", "2").toInt
 
-    opts.get("--path-folder") match {
+    val (d, m) = opts.get("--path-folder") match {
       case Some(prefix) =>
         // glob mode: enumerate h5 files, group per radar-day, rebuild all
-        val files = spark.read.format("binaryFile")
-          .option("pathGlobFilter", "*.h5").option("recursiveFileLookup", "true")
+        val files = spark.read.format("binaryFile").options(Vpts.h5Listing)
           .load(prefix).select(col("path"))
         val days = files.select(
             element_at(split(col("path"), "/"), -7).as("source"),
@@ -66,27 +79,16 @@ object Vph5ToVpts {
           .groupBy("source", "radar", "yyyy", "mm", "dd").count()
         val keys = LakeController.dayKeys(days)
         println(s"Create ${keys.size} daily VPTS files.")
-        keys.foreach { d =>
-          try LakeController.rebuildDay(spark, bucket, d)
-          catch { case e: Exception =>
-            System.err.println(s"[WARNING] day ${d.h5Folder(bucket)}: ${e.getMessage}")
-          }
-        }
-        LakeController.monthKeys(keys).foreach { m =>
-          try LakeController.rebuildMonth(spark, bucket, m)
-          catch { case e: Exception =>
-            System.err.println(s"[WARNING] month ${m.monthlyCsvPath(bucket)}: ${e.getMessage}")
-          }
-        }
+        LakeController.rebuild(spark, bucket, keys)
       case None =>
         val inventory = opts.getOrElse("--inventory", sys.error("--inventory or --path-folder required"))
         // 0 expands to the full bucket age inside Inventory.daysToRebuild
         if (modifiedDaysAgo == 0)
           println("Recreate the full set of bucket files. This will take a while!")
-        val (d, m) = LakeController.run(spark, bucket, inventory, modifiedDaysAgo,
+        LakeController.run(spark, bucket, inventory, modifiedDaysAgo,
           java.time.Instant.now(), opts.get("--coverage"))
-        println(s"Created $d daily and $m monthly VPTS files.")
     }
+    println(s"Created $d daily and $m monthly VPTS files.")
     println("Finished VPTS update procedure.")
   }
 }

@@ -17,6 +17,11 @@ object OdimPaths {
   val FileNameRegex: String =
     ".*([a-zA-Z]{5})_([a-z]*)_(\\d{4})(\\d\\d)(\\d\\d)T?(\\d\\d)(\\d\\d).*\\.h5"
 
+  /** [[FileNameRegex]] for driver-side matching of a file name: groups are
+    * radar, type, yyyy, mm, dd, hh, mm.
+    */
+  val FileName: scala.util.matching.Regex = FileNameRegex.r
+
   def radarCode(file: Column): Column = lower(regexp_extract(file, FileNameRegex, 1))
   def dataType(file: Column): Column = regexp_extract(file, FileNameRegex, 2)
   def year(file: Column): Column = regexp_extract(file, FileNameRegex, 3)

@@ -47,19 +47,44 @@ object LakeController {
 
   /** Rebuild one radar-month: concat its daily CSVs (sorted, month-filtered
     * file list) into the gzipped monthly file (`vph5_to_vpts.py:214-248`).
+    * Dailies are matched on the file name, as the reference does, so neither
+    * the bucket path nor a temp file can pull in another month.
     */
   def rebuildMonth(spark: SparkSession, bucket: String, month: MonthKey): Unit = {
-    val dummy = spark.emptyDataFrame
-    val filesystem = CsvSink.fs(dummy, month.dailyFolder(bucket))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val filesystem = CsvSink.fs(conf, month.dailyFolder(bucket))
     val folder = new HPath(month.dailyFolder(bucket))
+    val daily = s"\\Q${month.radar}_vpts_${month.yyyy}${month.mm}\\E\\d\\d\\.csv".r
     val files =
       if (filesystem.exists(folder))
-        filesystem.listStatus(folder).toSeq.map(_.getPath.toString)
-          .filter(_.contains(s"${month.yyyy}${month.mm}"))
+        filesystem.listStatus(folder).toSeq.map(_.getPath)
+          .filter(p => daily.matches(p.getName)).map(_.toString)
           .sorted
       else Seq.empty
     if (files.nonEmpty)
-      CsvSink.concatCsvFiles(dummy, files, month.monthlyCsvPath(bucket), gzip = true)
+      CsvSink.concatCsvFiles(conf, files, month.monthlyCsvPath(bucket), gzip = true)
+  }
+
+  /** Rebuild every given day, then every month they touch; a failing day or
+    * month is reported and skipped (X3). Returns (n_days_rebuilt,
+    * n_months_rebuilt).
+    */
+  def rebuild(spark: SparkSession, bucket: String, days: Seq[DayKey]): (Int, Int) = {
+    val okDays = days.count { d =>
+      try { rebuildDay(spark, bucket, d); true }
+      catch { case e: Exception =>
+        System.err.println(s"[lake] WARNING day ${d.h5Folder(bucket)}: ${e.getMessage}")
+        false
+      }
+    }
+    val okMonths = monthKeys(days).count { m =>
+      try { rebuildMonth(spark, bucket, m); true }
+      catch { case e: Exception =>
+        System.err.println(s"[lake] WARNING month ${m.monthlyCsvPath(bucket)}: ${e.getMessage}")
+        false
+      }
+    }
+    (okDays, okMonths)
   }
 
   /** Full incremental run from an inventory file (manifest path of the CLI).
@@ -70,22 +95,6 @@ object LakeController {
       coverageOut: Option[String] = None): (Int, Int) = {
     val inv = Inventory.read(spark, inventoryPath)
     coverageOut.foreach(p => CsvSink.writeSingleCsv(Inventory.coverage(inv), p))
-    val days = dayKeys(Inventory.daysToRebuild(inv, modifiedDaysAgo, now))
-    var okDays = 0
-    days.foreach { d =>
-      try { rebuildDay(spark, bucket, d); okDays += 1 }
-      catch { case e: Exception =>
-        System.err.println(s"[lake] WARNING day ${d.h5Folder(bucket)}: ${e.getMessage}")
-      }
-    }
-    val months = monthKeys(days)
-    var okMonths = 0
-    months.foreach { m =>
-      try { rebuildMonth(spark, bucket, m); okMonths += 1 }
-      catch { case e: Exception =>
-        System.err.println(s"[lake] WARNING month ${m.monthlyCsvPath(bucket)}: ${e.getMessage}")
-      }
-    }
-    (okDays, okMonths)
+    rebuild(spark, bucket, dayKeys(Inventory.daysToRebuild(inv, modifiedDaysAgo, now)))
   }
 }

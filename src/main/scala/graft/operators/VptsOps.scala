@@ -140,18 +140,21 @@ object VptsOps {
     }
   }
 
-  /** The benched per-file aggregate, shared by both decode paths. */
+  /** The benched per-file aggregate, shared by both scan paths. */
   private def ingestAgg(df: DataFrame): DataFrame =
     df.groupBy(col("source_file"))
       .agg(count(lit(1)).as("n_rows"),
         sum(col("height").cast("long")).as("height_sum"))
 
   /** Self-consistency oracle for the ingest entry: DuckDB cannot read HDF5,
-    * so the "oracle" is the same aggregate computed through the INDEPENDENT
-    * binaryFile+mapPartitions decode path ([[graft.vpts.Vpts.vptsViaBinaryFile]])
-    * written to /tmp parquet, which the oracle SQL reads back — the driver's
-    * hash compare then checks the DSv2 listing / pruning / bin-packed decode
-    * end-to-end against the fallback path. Written once per JVM (never from
+    * so the "oracle" is the same aggregate computed through the binaryFile +
+    * mapPartitions path ([[graft.vpts.Vpts.vptsViaBinaryFile]]) written to
+    * /tmp parquet, which the oracle SQL reads back. Both paths share the
+    * per-file decode (`Vpts.decodeFile`); what the oracle's hash compare
+    * keeps independent is the listing, the partitioning and the conversion
+    * of decoded rows to Spark rows (the DSv2 recursive listing, bin-packing
+    * and column-pruned InternalRows against binaryFile's listing, file
+    * splits and encoder projection). Written once per JVM (never from
     * a possibly-stale previous build): Verify stages it fresh each run;
     * Bench stages it during the untimed warmup pass.
     */

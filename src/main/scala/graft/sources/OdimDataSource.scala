@@ -1,8 +1,8 @@
 package graft.sources
 
-import graft.odim.OdimReader
-import graft.vpts.{BirdProfile, Vpts, VptsCsvVersion}
-import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import graft.functions.OdimPaths
+import graft.vpts.{Vpts, VptsCsvVersion}
+import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -11,19 +11,19 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 import scala.jdk.CollectionConverters._
 
 /** DataSourceV2 `odim` format: `spark.read.format("odim").load(dir)` scans a
   * lake of ODIM HDF5 VP files into the VPTS v1 string schema.
   *
   * Planning lists *.h5 recursively (driver side, Hadoop FS — works on
-  * s3a://) and bin-packs the small files into partitions of
-  * `maxPartitionBytes` (default 128 MiB, i.e. thousands of ~25 KB profiles
-  * per task — the small-file mitigation SURVEY.md §4 calls for). Each
-  * partition reader decodes its files with the pure-JVM reader and emits
-  * one InternalRow per altitude level. Options: `version` (vpts-csv ruleset,
-  * default v1.0), `failFast` (default true; false = warn-and-skip corrupt
-  * files).
+  * s3a://) and bin-packs the small files into partitions of at most
+  * 128 MiB, i.e. thousands of ~25 KB profiles per task — the small-file
+  * mitigation SURVEY.md §4 calls for. Each partition reader decodes its
+  * files with `Vpts.decodeFile` and emits one InternalRow per altitude
+  * level. Options: `version` (vpts-csv ruleset, default v1.0), `failFast`
+  * (default true; false = warn-and-skip corrupt files).
   */
 class OdimDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "odim"
@@ -90,9 +90,6 @@ final class OdimScanBuilder(options: CaseInsensitiveStringMap)
 object OdimFilePruning {
   import org.apache.spark.sql.sources._
 
-  private val Name =
-    ".*?([a-zA-Z]{5})_([a-z]*)_(\\d{4})(\\d\\d)(\\d\\d)T?(\\d\\d)(\\d\\d).*\\.h5".r
-
   def prunable(f: Filter): Boolean = f match {
     case EqualTo("radar", _) | In("radar", _) => true
     case EqualTo("datetime", _) => true
@@ -104,7 +101,7 @@ object OdimFilePruning {
   private def prefix16(v: Any): String = String.valueOf(v).take(16)
 
   def keep(fileName: String, filters: Seq[Filter]): Boolean = fileName match {
-    case Name(radar, _, y, m, d, hh, mm) =>
+    case OdimPaths.FileName(radar, _, y, m, d, hh, mm) =>
       val r = radar.toLowerCase
       val minute = s"$y-$m-${d}T$hh:$mm"
       filters.forall {
@@ -124,27 +121,6 @@ object OdimFilePruning {
 final case class OdimFileRef(path: String, size: Long)
 final case class OdimInputPartition(files: Seq[OdimFileRef]) extends InputPartition
 
-/** Java-serializable Hadoop Configuration (Configuration is Writable but
-  * not Serializable): carries the SESSION's Hadoop conf to executor-side
-  * readers, so custom filesystems and credentials configured on the session
-  * (fs.s3a.*, fs.<scheme>.impl, …) apply inside the scan — a fresh
-  * `new Configuration()` on the executor would silently drop them.
-  */
-final class SerializableHadoopConf(
-    @transient private var conf: org.apache.hadoop.conf.Configuration)
-    extends Serializable {
-  def value: org.apache.hadoop.conf.Configuration = conf
-  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-    out.defaultWriteObject()
-    conf.write(out)
-  }
-  private def readObject(in: java.io.ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    conf = new org.apache.hadoop.conf.Configuration(false)
-    conf.readFields(in)
-  }
-}
-
 final class OdimScan(options: CaseInsensitiveStringMap,
     required: StructType = null, limit: Int = -1,
     pruning: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
@@ -155,8 +131,10 @@ final class OdimScan(options: CaseInsensitiveStringMap,
   // would, in a multi-session application, pick up whichever session happens
   // to be active then and propagate the wrong fs.* settings to executors.
   @transient private val session = org.apache.spark.sql.SparkSession.active
+  // the SESSION's Hadoop conf, shipped to the executor-side readers so that
+  // filesystems and credentials set on the session (fs.s3a.*, ...) apply
   private val serializableConf =
-    new SerializableHadoopConf(session.sparkContext.hadoopConfiguration)
+    new SerializableConfiguration(session.sparkContext.hadoopConfiguration)
   private val schema0: StructType = Option(required).getOrElse(Vpts.schemaV1)
   override def readSchema(): StructType = schema0
   override def toBatch: Batch = this
@@ -185,13 +163,11 @@ final class OdimScan(options: CaseInsensitiveStringMap,
       else listed.filter(f => OdimFilePruning.keep(
         f.path.substring(f.path.lastIndexOf('/') + 1), pruning.toSeq))
     OdimScan.lastPlannedFileCount = files.length // test/debug probe
-    // cap partition size BOTH by maxPartitionBytes and by total/parallelism:
+    // cap partition size BOTH by MaxPartitionBytes and by total/parallelism:
     // a lake of small files must still fan out across all cores
-    val confMax = Option(options.get("maxPartitionBytes")).map(_.toLong)
-      .getOrElse(128L * 1024 * 1024)
     val parallelism = session.sparkContext.defaultParallelism.max(1)
     val totalBytes = files.map(_.size).sum.max(1L)
-    val maxBytes = math.max(1L, math.min(confMax, totalBytes / parallelism))
+    val maxBytes = math.max(1L, math.min(OdimScan.MaxPartitionBytes, totalBytes / parallelism))
     // first-fit bin-packing in sorted order (keeps day-locality per task)
     val parts = Seq.newBuilder[OdimInputPartition]
     var cur = Vector.empty[OdimFileRef]
@@ -214,6 +190,8 @@ final class OdimScan(options: CaseInsensitiveStringMap,
 }
 
 object OdimScan {
+  private val MaxPartitionBytes = 128L * 1024 * 1024
+
   /** Observability/test probe: file count of the most recent planning pass
     * (after filter-based pruning) in this JVM.
     */
@@ -221,7 +199,7 @@ object OdimScan {
 }
 
 final class OdimPartitionReaderFactory(version: String, failFast: Boolean,
-    columns: Array[String], limit: Int, conf: SerializableHadoopConf)
+    columns: Array[String], limit: Int, conf: SerializableConfiguration)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val files = partition.asInstanceOf[OdimInputPartition].files
@@ -231,7 +209,7 @@ final class OdimPartitionReaderFactory(version: String, failFast: Boolean,
 
 final class OdimPartitionReader(files: Seq[OdimFileRef], version: String,
     failFast: Boolean, columns: Array[String], limit: Int,
-    conf: SerializableHadoopConf)
+    conf: SerializableConfiguration)
     extends PartitionReader[InternalRow] {
 
   private val ruleset = VptsCsvVersion(version)
@@ -241,27 +219,23 @@ final class OdimPartitionReader(files: Seq[OdimFileRef], version: String,
   private val fileIt = files.iterator
   private var rowIt: Iterator[Seq[String]] = Iterator.empty
   private var current: InternalRow = _
-  private def hadoopConf = conf.value
+
+  /** Single positioned readFully: java.io readAllBytes over the Hadoop
+    * stream degrades to many small reads (7x slowdown on small files).
+    */
+  private def readFile(f: OdimFileRef): Array[Byte] = {
+    val p = new HPath(f.path)
+    val bytes = new Array[Byte](f.size.toInt)
+    val in = p.getFileSystem(conf.value).open(p)
+    try in.readFully(0, bytes) finally in.close()
+    bytes
+  }
 
   private def decodeNextFile(): Boolean = {
     while (fileIt.hasNext) {
       val f = fileIt.next()
-      val name = f.path.substring(f.path.lastIndexOf('/') + 1)
-      try {
-        val p = new HPath(f.path)
-        val fs = p.getFileSystem(hadoopConf)
-        // single positioned readFully: java.io readAllBytes over the Hadoop
-        // stream degrades to many small reads (7x slowdown on small files)
-        val bytes = new Array[Byte](f.size.toInt)
-        val in = fs.open(p)
-        try in.readFully(0, bytes) finally in.close()
-        val reader = OdimReader.checkVpOdim(OdimReader(bytes, name))
-        rowIt = ruleset.rows(BirdProfile.fromOdim(reader, name)).iterator
-        if (rowIt.hasNext) return true
-      } catch {
-        case e: Exception if !failFast =>
-          System.err.println(s"[odim] skipping $name: ${e.getMessage}")
-      }
+      rowIt = Vpts.decodeFile(ruleset, f.path, failFast)(readFile(f)).iterator
+      if (rowIt.hasNext) return true
     }
     false
   }

@@ -1,9 +1,10 @@
 package graft.streaming
 
-import graft.odim.OdimReader
-import graft.vpts.{BirdProfile, VptsCsvVersion, Vpts}
+import graft.functions.OdimPaths
+import graft.vpts.Vpts
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Streaming ODIM ingestion: the Structured Streaming twin of `Vpts.vpts`.
   * New h5 files landing in the lake become micro-batches (file stream over
@@ -14,41 +15,18 @@ import org.apache.spark.sql.functions._
   */
 object OdimStream {
 
-  /** Streaming DataFrame of VPTS v1 rows from a lake prefix. */
+  private val binaryFileSchema =
+    StructType.fromDDL("path STRING, modificationTime TIMESTAMP, length BIGINT, content BINARY")
+
+  /** Streaming DataFrame of VPTS v1 rows from a lake prefix: the same
+    * decode as `Vpts.vptsViaBinaryFile`, over `readStream`.
+    */
   def vptsStream(spark: SparkSession, dir: String,
-      version: String = "v1.0", failFast: Boolean = false): DataFrame = {
-    val ruleset = VptsCsvVersion(version)
-    import spark.implicits._
-    val binarySchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("path", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("modificationTime", org.apache.spark.sql.types.TimestampType),
-      org.apache.spark.sql.types.StructField("length", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("content", org.apache.spark.sql.types.BinaryType)))
-    val bin = spark.readStream
-      .format("binaryFile")
-      .schema(binarySchema)
-      .option("pathGlobFilter", "*.h5")
-      .option("recursiveFileLookup", "true")
-      .load(dir)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-    val rows: Dataset[Seq[String]] = bin.mapPartitions { it =>
-      it.flatMap { case (path, bytes) =>
-        val name = path.substring(path.lastIndexOf('/') + 1)
-        try {
-          val reader = OdimReader.checkVpOdim(OdimReader(bytes, name))
-          ruleset.rows(BirdProfile.fromOdim(reader, name))
-        } catch {
-          case e: Exception if !failFast =>
-            System.err.println(s"[odim-stream] skipping $name: ${e.getMessage}")
-            Seq.empty
-        }
-      }
-    }
-    rows.select(ruleset.columns.zipWithIndex.map { case (c, i) =>
-      element_at(col("value"), i + 1).as(c)
-    }: _*)
-  }
+      version: String = "v1.0", failFast: Boolean = false): DataFrame =
+    Vpts.decodeBinaryFiles(
+      spark.readStream.format("binaryFile").schema(binaryFileSchema)
+        .options(Vpts.h5Listing).load(dir),
+      version, failFast)
 
   /** Streaming lake materialization with WHOLE-DAY rebuild semantics
     * (SURVEY.md §2.8): the micro-batch only identifies which (radar, day)
@@ -58,8 +36,8 @@ object OdimStream {
     * with the previously ingested files instead of replacing the day with
     * the batch alone — matching the reference, which re-lists and re-converts
     * the full day folder on any change (vph5_to_vpts.py:159-202).
-    */
-  /** `afterRebuild` is a test seam invoked with the batch id AFTER the day
+    *
+    * `afterRebuild` is a test seam invoked with the batch id AFTER the day
     * rebuild but BEFORE the checkpoint commits — throwing from it simulates
     * a crash at the worst possible point (effect applied, progress not
     * recorded). Exactly-once then rests on the rebuild being IDEMPOTENT:
@@ -81,12 +59,6 @@ object OdimStream {
     q.awaitTermination()
   }
 
-  /** Name pattern of an ODIM file (driver-side twin of
-    * graft.functions.OdimPaths.FileNameRegex).
-    */
-  private val H5Name =
-    ".*?([a-zA-Z]{5})_([a-z]*)_(\\d{4})(\\d\\d)(\\d\\d)T?(\\d\\d)(\\d\\d).*\\.h5".r
-
   private def rebuildAffectedDays(batch: DataFrame, inDir: String,
       lakeDir: String): Unit = {
     val spark = batch.sparkSession
@@ -105,7 +77,7 @@ object OdimStream {
     while (it.hasNext) {
       val p = it.next().getPath
       p.getName match {
-        case H5Name(radar, _, y, m, d, _, _)
+        case OdimPaths.FileName(radar, _, y, m, d, _, _)
             if days.contains((radar.toLowerCase, s"$y$m$d")) =>
           affected += p.toString
         case _ => ()

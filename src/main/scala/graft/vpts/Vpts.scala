@@ -1,26 +1,19 @@
 package graft.vpts
 
 import graft.odim.OdimReader
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** The core VPTS transforms, Spark-first (`vpts.py:180-275`):
   *
-  *   binaryFile scan -> mapPartitions ODIM decode -> per-level explode ->
-  *   26-column string projection -> canonical total sort
+  *   file scan -> per-file ODIM decode ([[Vpts.decodeFile]]) -> per-level
+  *   26-column string rows -> canonical total sort
   *
   * The reference's multiprocessing.Pool becomes Spark task parallelism over
   * the file scan; its pd.concat + sort becomes one range-partitioned total
   * sort. Duplicate (radar, datetime, height) rows from different source
   * files are preserved by contract (tests/test_vpts.py:84-91).
-  *
-  * Scale notes: ODIM files are ~25 KB (small-file regime) — the binaryFile
-  * source packs many files per task (`spark.sql.files.maxPartitionBytes` /
-  * `openCostInBytes`); decode is executor-side and embarrassingly parallel;
-  * the only shuffle is the final sort, whose key (radar, datetime) matches
-  * the day-partitioned output layout so each output partition is written by
-  * one task.
   */
 object Vpts {
 
@@ -29,8 +22,7 @@ object Vpts {
 
   /** Many ODIM VP files -> canonical VPTS DataFrame (reference `vpts()`).
     * Scans through the DSv2 `odim` source (parallel listing + small-file
-    * bin-packing; ~2x the binaryFile path on many-file lakes), then applies
-    * the canonical total sort.
+    * bin-packing), then applies the canonical total sort.
     */
   def vpts(spark: SparkSession, paths: Seq[String], version: String = "v1.0",
       failFast: Boolean = true): DataFrame = {
@@ -41,38 +33,50 @@ object Vpts {
     sortCanonical(df)
   }
 
-  /** binaryFile + mapPartitions variant of [[vpts]] (kept for comparison and
-    * as the no-custom-source fallback).
+  /** One ODIM file -> its VPTS rows: the VP gate, the decode and the render
+    * (reference `vp()` for one file). Every scan path decodes through here.
+    * A file that fails to read or decode is skipped with a warning when
+    * `failFast` is false and rethrown otherwise.
     */
-  def vptsViaBinaryFile(spark: SparkSession, paths: Seq[String], version: String = "v1.0",
-      failFast: Boolean = true): DataFrame = {
-    val ruleset = VptsCsvVersion(version)
-    import spark.implicits._
-    val bin = spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.h5")
-      .option("recursiveFileLookup", "true")
-      .load(paths: _*)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-    val rows: Dataset[Seq[String]] = bin.mapPartitions { it =>
-      it.flatMap { case (path, bytes) =>
-        val name = path.substring(path.lastIndexOf('/') + 1)
-        try {
-          val reader = OdimReader.checkVpOdim(OdimReader(bytes, name))
-          ruleset.rows(BirdProfile.fromOdim(reader, name))
-        } catch {
-          case e: Exception if !failFast =>
-            System.err.println(s"[vpts] skipping $name: ${e.getMessage}")
-            Seq.empty
-        }
-      }
+  def decodeFile(ruleset: VptsCsvVersion, path: String, failFast: Boolean)(
+      bytes: => Array[Byte]): Seq[Seq[String]] = {
+    val name = path.substring(path.lastIndexOf('/') + 1)
+    try ruleset.rows(BirdProfile.fromOdim(OdimReader.checkVpOdim(OdimReader(bytes, name)), name))
+    catch {
+      case e: Exception if !failFast =>
+        System.err.println(s"[vpts] skipping $name: ${e.getMessage}")
+        Seq.empty
     }
-    val df = rows.select(
-      ruleset.columns.zipWithIndex.map { case (c, i) =>
+  }
+
+  /** Options of a recursive `binaryFile` listing of the *.h5 files. */
+  private[graft] val h5Listing: Map[String, String] =
+    Map("pathGlobFilter" -> "*.h5", "recursiveFileLookup" -> "true")
+
+  /** `binaryFile` rows (batch or streaming) -> the version's string columns,
+    * one row per altitude level of each decoded file.
+    */
+  private[graft] def decodeBinaryFiles(bin: DataFrame, version: String,
+      failFast: Boolean): DataFrame = {
+    val ruleset = VptsCsvVersion(version)
+    val spark = bin.sparkSession
+    import spark.implicits._
+    bin.select(col("path"), col("content")).as[(String, Array[Byte])]
+      .mapPartitions(_.flatMap { case (path, bytes) =>
+        decodeFile(ruleset, path, failFast)(bytes)
+      })
+      .select(ruleset.columns.zipWithIndex.map { case (c, i) =>
         element_at(col("value"), i + 1).as(c)
       }: _*)
-    sortCanonical(df)
   }
+
+  /** binaryFile + mapPartitions variant of [[vpts]]: the reference that the
+    * `odim` source's listing and partitioning are checked against.
+    */
+  def vptsViaBinaryFile(spark: SparkSession, paths: Seq[String], version: String = "v1.0",
+      failFast: Boolean = true): DataFrame =
+    sortCanonical(decodeBinaryFiles(
+      spark.read.format("binaryFile").options(h5Listing).load(paths: _*), version, failFast))
 
   /** One file -> VP DataFrame (reference `vp()`). */
   def vp(spark: SparkSession, path: String, version: String = "v1.0"): DataFrame =
@@ -85,36 +89,6 @@ object Vpts {
   def sortCanonical(df: DataFrame): DataFrame =
     df.orderBy(col("radar"), col("datetime"),
       col("height").cast("int"), col("source_file"))
-
-  /** Single ordered CSV file sink (reference `vpts_to_csv`, vpts.py:278-294):
-    * the VPTS exchange contract is ONE sorted CSV, so this is a driver-side
-    * ordered write (toLocalIterator — partitions stream in sort order without
-    * collecting the whole result).
-    */
-  def vptsToCsv(df: DataFrame, filePath: String): Unit = {
-    val path = java.nio.file.Paths.get(filePath)
-    Option(path.getParent).foreach(java.nio.file.Files.createDirectories(_))
-    val out = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-      java.nio.file.Files.newOutputStream(path), java.nio.charset.StandardCharsets.UTF_8))
-    try {
-      out.write(df.columns.mkString(","))
-      out.write("\n")
-      val it = df.toLocalIterator()
-      while (it.hasNext) {
-        val row = it.next()
-        var i = 0
-        val n = row.length
-        val sb = new StringBuilder
-        while (i < n) {
-          if (i > 0) sb.append(',')
-          sb.append(csvQuote(if (row.isNullAt(i)) "" else row.get(i).toString))
-          i += 1
-        }
-        out.write(sb.toString)
-        out.write("\n")
-      }
-    } finally out.close()
-  }
 
   /** String-preserving VPTS CSV scan (reference S7, `vph5_to_vpts.py:
     * 230-240`): all 26 columns as raw strings, no NA inference — "" and
@@ -152,10 +126,4 @@ object Vpts {
     java.nio.file.Files.createDirectories(dir)
     java.nio.file.Files.writeString(dir.resolve("vpts.resource.json"), json)
   }
-
-  /** pandas to_csv minimal quoting. */
-  private def csvQuote(s: String): String =
-    if (s.exists(c => c == ',' || c == '"' || c == '\n' || c == '\r'))
-      "\"" + s.replace("\"", "\"\"") + "\""
-    else s
 }

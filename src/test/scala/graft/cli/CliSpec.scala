@@ -110,4 +110,31 @@ class CliSpec extends AnyFunSuite {
       assert(sink.got.size == 2 && sink.got.last._1.contains("transfer_baltrad"))
     } finally Alerting.sink = prev
   }
+
+  test("vph5ToVpts rejects unknown flags, missing values and bad numbers before the session") {
+    class Collecting extends Alerting.AlertSink {
+      val got = scala.collection.mutable.ArrayBuffer.empty[String]
+      override def alert(s: String, m: String): Unit = got += m
+    }
+    val sink = new Collecting
+    val prev = Alerting.sink
+    Alerting.sink = sink
+    try {
+      // each of these would otherwise reach the session and fail later (or
+      // not at all) with a different message
+      Seq(
+        Seq("--bucket", "/b", "--inventory", "/i.csv", "--modifed-days-ago", "5") ->
+          "unknown option --modifed-days-ago",
+        Seq("--bucket", "/b", "--inventory", "/i.csv", "--coverage") ->
+          "--coverage requires a value",
+        Seq("--bucket", "/b", "--inventory", "/i.csv", "--modified-days-ago", "two") ->
+          "--modified-days-ago: not an integer: two"
+      ).foreach { case (args, want) =>
+        val e = intercept[RuntimeException](Vph5ToVpts.main(args.toArray))
+        assert(e.getMessage == want)
+        assert(sink.got.last.contains(want))
+      }
+      assert(sink.got.size == 3)
+    } finally Alerting.sink = prev
+  }
 }

@@ -19,7 +19,7 @@ class VptsGoldenSpec extends AnyFunSuite {
   test("daily VPTS CSV byte-matches the reference golden") {
     val df = Vpts.vpts(spark, Seq(fixtureDir))
     val out = Files.createTempDirectory("vpts").resolve("nosta_daily.csv")
-    Vpts.vptsToCsv(df, out.toString)
+    graft.lake.CsvSink.writeSingleCsv(df, out.toString)
     val got = new String(Files.readAllBytes(out), "UTF-8")
     val want = new String(Files.readAllBytes(Paths.get(golden)), "UTF-8")
     val gotLines = got.split("\n", -1)

@@ -20,7 +20,7 @@ class VptsReadbackSpec extends AnyFunSuite {
     assert(df.filter(col("u").isNull).count() == 0)
     // round-trip: writing it back reproduces the golden bytes
     val tmp = java.nio.file.Files.createTempDirectory("rt").resolve("rt.csv")
-    Vpts.vptsToCsv(Vpts.sortCanonical(df), tmp.toString)
+    graft.lake.CsvSink.writeSingleCsv(Vpts.sortCanonical(df), tmp.toString)
     val got = new String(java.nio.file.Files.readAllBytes(tmp), "UTF-8")
     val want = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("/root/reference/tests/data/inventory/nosta_vpts_20230311.csv")), "UTF-8")
